@@ -2,8 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session construction shared by the driver-facing mains (Verify,
-  * Bench, the probe mains).
+/** The one place a SparkSession is built: the entry-point mains
+  * (Verify, Bench, the probe mains), the serving and demo mains, the
+  * benchmark and the test suite all start here, each adding its own
+  * `.config` (scheduler mode, app name, warehouse dir) before
+  * `getOrCreate()`.
+  *
+  * Every session built here carries [[GraftFunctions]] as a session
+  * extension, so graft's SQL functions resolve in it and in every
+  * `newSession()`/`cloneSession()` of it.
   *
   * `SPARK_GRAFT_MASTER` overrides the default `local[cpus]` — the
   * multi-JVM gate runs the whole correctness suite under
@@ -16,30 +23,20 @@ import org.apache.spark.sql.SparkSession
   *
   * On a non-local master the builder additionally ships this JVM's
   * classpath to the executors (same-machine executors can read it
-  * directly — a real multi-node deployment submits a jar instead),
-  * mirrors the JDK-17 --add-opens list (spark-submit injects these;
-  * sbt-forked drivers must pass them along for the executor JVMs), and
+  * directly — a real multi-node deployment submits a jar instead) and
   * turns on checkpoint-file cleanup so the reliable barriers don't
-  * accumulate files across a 178-query suite run.
+  * accumulate files across a 178-query suite run. The executor JVMs'
+  * JDK-17 `--add-opens` need no copy here: the SparkContext constructor
+  * prepends Spark's own module options to
+  * `spark.executor.extraJavaOptions`.
   */
 object HarnessSession {
-
-  /** JDK-17 module opens Spark needs; matches build.sbt / the launcher's
-    * JavaModuleOptions.defaultModuleOptions(). */
-  private val Jdk17AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
 
   def builder(cpus: String): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b = SparkSession.builder()
       .master(master)
+      .withExtensions(GraftFunctions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -56,7 +53,6 @@ object HarnessSession {
     if (!isLocal) {
       b.config("spark.executor.extraClassPath",
           System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions", Jdk17AddOpens)
         .config("spark.executor.memory",
           sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")

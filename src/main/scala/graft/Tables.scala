@@ -58,6 +58,8 @@ object Tables {
     val already = spark.conf.getOption("graft.registered.sfDir")
     if (!already.contains(sfDir)) {
       names.foreach { n => load(spark, sfDir, n).createOrReplaceTempView(n) }
+      // SparkEntry's callers may pass a session they built themselves,
+      // without HarnessSession's GraftFunctions extension
       GraftFunctions.registerAll(spark)
       spark.conf.set("graft.registered.sfDir", sfDir)
     }

@@ -41,6 +41,12 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
   // lossless for Spark's TimestampType (which is micros internally).
   spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
+  // this catalog is the only producer of the `time` + year/month/day/hour
+  // layout the pruning rule matches, so the rule is installed with it —
+  // on whatever session the catalog serves, including per-database
+  // `newSession()`s and sessions an embedder built itself
+  graft.plans.TimePartitionPruning.install(spark)
+
   private def fs(p: Path): FileSystem = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def tablePath(db: String, measurement: String): String = s"$root/$db/$measurement"

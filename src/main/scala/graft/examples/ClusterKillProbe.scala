@@ -48,7 +48,6 @@ object ClusterKillProbe {
     // is the evidence that the reliable arm is what saves the job)
     sys.env.get("SPARK_GRAFT_BARRIER_MODE")
       .foreach(m => spark.conf.set("spark.graft.barrier.mode", m))
-    graft.GraftFunctions.registerAll(spark)
 
     // pseudo-random functional graph (every node one out-edge): large
     // components, ~log n contraction rounds — deterministic, no fixture

@@ -1,9 +1,9 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.catalog.GraftCatalog
 import graft.ingest.HourPartitionedWriter
 import graft.jobs.{Compaction, Retention}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Lifecycle jobs at sf1 (round-11 VERDICT #8): ingest the 1 M-row /
@@ -26,10 +26,7 @@ import org.apache.spark.sql.functions._
 object LifecycleSf1 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/testdata_sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = HarnessSession.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val root = java.nio.file.Files.createTempDirectory("graft_sf1_cat").toString
     val cat = new GraftCatalog(spark, root)

@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.HarnessSession
 import graft.server.HttpServer
-import org.apache.spark.sql.SparkSession
 
 /** Start the engine as a standalone HTTP service (the reference's
   * `arc serve` shape):
@@ -21,9 +21,10 @@ import org.apache.spark.sql.SparkSession
   *                        trigger only)
   *   SPARK_GRAFT_CPUS     local[N] parallelism (default all cores)
   *
-  * On a real cluster, build the SparkSession against your cluster
-  * master instead — HttpServer only needs the session and a storage
-  * root (file://, s3a://, abfs://).
+  * On a real cluster, set SPARK_GRAFT_MASTER to your cluster master —
+  * HttpServer only needs a session built by HarnessSession (or carrying
+  * the GraftFunctions extension) and a storage root (file://, s3a://,
+  * abfs://).
   */
 object ServeMain {
   def main(args: Array[String]): Unit = {
@@ -31,16 +32,12 @@ object ServeMain {
     val port = args.lift(1).flatMap(_.toIntOption).getOrElse(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.max(4, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = HarnessSession.builder(cpus)
       .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       // FAIR scheduling: QueryFacade assigns each query a pool from a
       // fixed hashed set, so concurrent queries share task slots
       // instead of FIFO-queueing behind the first long scan
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = new HttpServer(spark, root, port,

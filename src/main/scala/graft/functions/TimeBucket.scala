@@ -72,7 +72,8 @@ object TimeBucket {
   def bucket(widthUs: Long, tsUs: Long): Long =
     Math.floorDiv(tsUs, widthUs) * widthUs
 
-  /** DataFrame-API form; requires GraftFunctions.registerAll on the session.
+  /** DataFrame-API form; requires the GraftFunctions extension on the
+    * session (see HarnessSession).
     * e.g. `time_bucket(expr("INTERVAL '1' HOUR"), col("ts"))`. */
   def time_bucket(width: Column, ts: Column): Column =
     call_function("time_bucket", width, ts)

@@ -193,8 +193,8 @@ object HourPartitionedWriter {
       s"parquet.bloom.filter.enabled#$c" -> "true",
       // explicit NDV bound: without it parquet-mr builds an ADAPTIVE
       // multi-candidate filter and pays several hash-insert paths per
-      // value (measured ~4-10x write-path slowdown on ThroughputBench's
-      // direct flush). 64k NDV = a 64 KB filter, ~1% fpp up to 64k
+      // value (measured ~4-10x slowdown on the single-thread direct
+      // flush; SCALE.md §Single-node throughput). 64k NDV = a 64 KB filter, ~1% fpp up to 64k
       // distinct tag values per row group; beyond that fpp degrades
       // gracefully (filters stay correct, just less selective).
       s"parquet.bloom.filter.expected.ndv#$c" -> BloomNdv.toString)).toMap

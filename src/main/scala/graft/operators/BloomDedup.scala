@@ -55,7 +55,6 @@ object BloomDedup {
   def newDocs(history: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       expectedItems: Long = 0L, fpp: Double = 0.01): DataFrame = {
-    graft.GraftFunctions.registerAll(history.sparkSession)
     val histFp = history
       .select(graft.functions.TextFunctions.charFingerprint(col(textCol)).as("fp"))
     val items = if (expectedItems > 0) expectedItems

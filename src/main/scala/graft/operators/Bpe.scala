@@ -131,7 +131,8 @@ object Bpe {
   /** `bpe_encode(text)` → array of subword pieces for the whole text
     * (words split on whitespace; EOW markers on the last piece of each
     * word are KEPT — callers counting tokens or building a vocab need
-    * the boundary distinction). Requires GraftFunctions.registerAll. */
+    * the boundary distinction). Requires the GraftFunctions extension
+    * on the session (see HarnessSession). */
   def encodeExpr(text: Column, model: Model): Column =
     call_function("bpe_encode", text, lit(model.serialized))
 

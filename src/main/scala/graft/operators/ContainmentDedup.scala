@@ -73,7 +73,6 @@ object ContainmentDedup {
     * consumers follow. */
   private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int): DataFrame = {
-    graft.GraftFunctions.registerAll(docs.sparkSession)
     val parallelism = docs.sparkSession.sparkContext.defaultParallelism
     docs.select(col(idCol), col(textCol))
       .repartition(parallelism)

@@ -62,7 +62,6 @@ object MinHashDedup {
     * serializes the whole corpus through one task). */
   def signatures(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numHashes: Int): DataFrame = {
-    graft.GraftFunctions.registerAll(docs.sparkSession)
     val parallelism = docs.sparkSession.sparkContext.defaultParallelism
     // tokens -> shingle hashes -> signature is one nested native
     // expression (single evaluation per row); the checkpoint materializes

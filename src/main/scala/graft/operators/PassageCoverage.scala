@@ -38,7 +38,6 @@ object PassageCoverage {
     * coverage ratio (q86 rounds it integer-exactly for its oracle). */
   def stats(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int, skewSafe: Boolean = false): DataFrame = {
-    graft.GraftFunctions.registerAll(docs.sparkSession)
     // spread to full parallelism first: shingle hashing is CPU-bound and
     // a few parquet splits would serialize it through a handful of tasks
     val sh = docs

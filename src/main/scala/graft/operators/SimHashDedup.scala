@@ -153,7 +153,6 @@ object SimHashDedup {
   private def weightedSignaturesImpl(docs: DataFrame, idCol: String,
       textCol: String, bits: Int, hashOf: Column => Column): DataFrame = {
     val spark = docs.sparkSession
-    graft.GraftFunctions.registerAll(spark)
     val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("_t"))
       .repartition(spark.sparkContext.defaultParallelism)
       .materialize() // feeds the census AND the vote stream

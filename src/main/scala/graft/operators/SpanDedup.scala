@@ -112,7 +112,6 @@ object SpanDedup {
   /** Positioned span-hash stream: (_id, pos [1-based], h). */
   private def spanHashes(docs: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
-    graft.GraftFunctions.registerAll(docs.sparkSession)
     val toks = TextFunctions.tokens(col(textCol))
     // positions are 1-based on both engines; Spark's sequence(1, 0)
     // DESCENDS instead of returning empty, so short docs need the guard

@@ -27,7 +27,6 @@ object Winnowing {
     * first-occurrence order) plus the positional shingle count. */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int, w: Int): DataFrame = {
-    graft.GraftFunctions.registerAll(docs.sparkSession)
     val parallelism = docs.sparkSession.sparkContext.defaultParallelism
     docs.select(col(idCol), col(textCol))
       .repartition(parallelism) // CPU-bound per row; don't inherit file splits

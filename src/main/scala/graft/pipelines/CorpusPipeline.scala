@@ -102,7 +102,6 @@ object CorpusPipeline {
       evalTexts: Option[DataFrame] = None): DataFrame = {
     // 0. PII scrub first, so every downstream stage (annotations,
     // signatures, the kept text itself) sees masked content only
-    graft.GraftFunctions.registerAll(docs.sparkSession)
     val scrubbed =
       if (!cfg.scrubPii) docs.withColumn("_text", col(textCol))
       else docs.withColumn("_text",

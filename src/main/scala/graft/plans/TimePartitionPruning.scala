@@ -159,7 +159,8 @@ object TimePartitionPruning extends Rule[LogicalPlan] {
   }
 
   /** Idempotently install into a session (runs after the built-in
-    * optimizer batches, i.e. post constant folding). Synchronized:
+    * optimizer batches, i.e. post constant folding). The GraftCatalog
+    * constructor calls this for the session it serves. Synchronized:
     * concurrent sessions/suites would otherwise race the list update. */
   def install(spark: SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraOptimizations

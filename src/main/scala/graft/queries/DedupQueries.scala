@@ -250,7 +250,6 @@ object DedupQueries {
     // grouping; never pairwise in docs. Hash collisions (~1e9 space)
     // affect both engines identically — the oracle mirrors the kernel.
     "q99_source_overlap" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       val grouped = t(s, dir, "documents")
         .select(col("source"), explode(graft.operators.MinHashDedup
           .shingleHashesFromTokens(col("text"), 3)).as("sh"))
@@ -284,7 +283,6 @@ object DedupQueries {
     // corpus's short random texts only overlap at 3-grams, so the window
     // is a parameter, not a semantic.
     "q83_decontaminate" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       // localCheckpoint: the tokenize+shingle pass is the dominant CPU
       // cost and BOTH consumers (eval broadcast set + probe side) read
       // it — without materialization it runs once per consumer
@@ -351,7 +349,6 @@ object DedupQueries {
     // every doc is absorbed map-side by the min/count partial aggs (no
     // q86-style hot window partition; two keyed shuffles total).
     "q109_shingle_novelty" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       // repartition BEFORE the per-row shingling: the table arrives as
       // few parquet splits and the hash work would run on as few cores
       // (MinHashDedup.signatures records the same lesson); the native

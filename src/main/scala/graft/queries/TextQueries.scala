@@ -145,7 +145,6 @@ object TextQueries {
     // fraction. Token counts come from the local term_counts kernel —
     // per-row compute, no shuffle except the final sort.
     "q82_text_repetition" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       t(s, dir, "documents")
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .select(
@@ -175,7 +174,6 @@ object TextQueries {
     // up to the final division is integer-exact, and the whole score is
     // per-row codegen'd compute — linear, zero shuffles before the sort.
     "q87_quality_classifier" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       val toks = tokens(col("text"))
       val weights = transform(toks, tk =>
         (tokenHash(tk) % ClassifierD) * 40503L % 2001L - 1000L)
@@ -329,7 +327,6 @@ object TextQueries {
     // stats; integer-exact (numerator n^2 - sum c_i^2 is a whole
     // number), pure per-row compute, no shuffle before the sort.
     "q108_token_diversity" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       val toksC = tokens(col("text"))
       t(s, dir, "documents")
         .select(col("doc_id"),
@@ -397,7 +394,6 @@ object TextQueries {
     // subword sibling of q60's whitespace counts, feeding the same
     // token-budget operators (q84/q102) with tokenizer-true numbers.
     "q121_bpe_tokens" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       val docs = t(s, dir, "documents")
       val model = bpeCache.getOrElseUpdate(dir,
         graft.operators.Bpe.learn(docs, "text", numMerges = 200))
@@ -424,7 +420,6 @@ object TextQueries {
     // oracle would collapse to n_pieces = n_words. All-integer/string
     // computation — no float concerns anywhere.
     "q121b_bpe_exact" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       val docs = t(s, dir, "documents")
       val model = bpeCache.getOrElseUpdate(dir + "#30",
         graft.operators.Bpe.learn(docs, "text", numMerges = 30))
@@ -441,7 +436,6 @@ object TextQueries {
     // q121b's 30-merge model and its oracle's full BPE-in-SQL
     // construction; the ratio is the integer-exact 6-dp rational.
     "q157_tokenizer_fertility" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       val docs = t(s, dir, "documents")
       val model = bpeCache.getOrElseUpdate(dir + "#30",
         graft.operators.Bpe.learn(docs, "text", numMerges = 30))

@@ -163,7 +163,6 @@ object TimeseriesQueries {
     // exactly and the oracle (window spelling — DuckDB 1.0's arg_min
     // lacks composite keys) matches bit-for-bit.
     "q118_m4_downsample" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       t(s, dir, "events")
         .groupBy(col("event_type"),
           graft.functions.TimeBucket.time_bucket(
@@ -225,7 +224,6 @@ object TimeseriesQueries {
     // series id (high cardinality), which is what the shape assumes —
     // skew on a hot series is bounded by that series' sample count.
     "q120_counter_rate" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
       t(s, dir, "events")
         .select(col("event_type"), col("ts"), col("event_id"), dec(col("value")).as("v"))

@@ -21,8 +21,6 @@ import scala.collection.concurrent.TrieMap
   */
 final class QueryFacade(spark: SparkSession) {
 
-  graft.GraftFunctions.registerAll(spark)
-
   private val seq = new AtomicLong(0)
   // id -> (job group, sql, start ns)
   private val active = TrieMap.empty[Long, (String, String, Long)]

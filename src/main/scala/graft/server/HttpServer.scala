@@ -60,6 +60,13 @@ import scala.util.matching.Regex
   * SetBodyStreamWriter (query.go:1745). Auth is an optional static
   * bearer token; the reference's multi-token RBAC store is ops-plane
   * (SURVEY §2.J11, excluded).
+  *
+  * Embedder contract: build `spark` with `graft.HarnessSession.builder`
+  * or add `.withExtensions(graft.GraftFunctions)` to your own builder.
+  * The per-database sessions are `newSession()`s of it and inherit
+  * graft's SQL functions from the extension; on a session without it,
+  * a query using them fails analysis with `UNRESOLVED_ROUTINE` — an
+  * error, never a wrong answer.
   */
 final class HttpServer(
     val spark: SparkSession,
@@ -110,12 +117,13 @@ final class HttpServer(
   // contending on one view slot (newSession shares the SparkContext and
   // cached data; job groups live on the shared context, so the single
   // registry/cancel id-space still covers every session's queries).
+  // graft's SQL functions come with the root session's extension, and
+  // each child's GraftCatalog installs the pruning rule into it.
   private val dbSessions = TrieMap.empty[String, (SparkSession, GraftCatalog)]
 
   private[server] def sessionFor(db: String): (SparkSession, GraftCatalog) =
     dbSessions.getOrElseUpdate(db, {
       val s = spark.newSession()
-      graft.GraftFunctions.registerAll(s) // function registry is per-session
       // maintenance runs concurrently with serving: compaction/retention
       // delete source files that a registered view's snapshot may still
       // list. Skipping a vanished file (instead of failing the query)

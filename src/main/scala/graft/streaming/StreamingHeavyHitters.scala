@@ -51,7 +51,6 @@ object StreamingHeavyHitters {
     require(k > 0 && nShards > 0)
     val spark = items.sparkSession
     import spark.implicits._
-    graft.GraftFunctions.registerAll(spark)
     // NOTE a declarative pre-count (groupBy.agg before the state op)
     // would itself be an UNBOUNDED streaming aggregation — one state
     // row per token forever, exactly what MG exists to avoid — so the

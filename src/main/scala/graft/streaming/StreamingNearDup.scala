@@ -64,7 +64,6 @@ object StreamingNearDup {
       idleTimeout: String = null): Dataset[Candidate] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.GraftFunctions.registerAll(spark)
     val sigs = docs.select(col(idCol).cast("long").as("id"),
       TextFunctions.minhashSignature(
         MinHashDedup.shingleHashesFromTokens(col(textCol), shingleK),
@@ -88,8 +87,8 @@ object StreamingNearDup {
             // membership via a set: List.contains made this scan
             // O(batch x cap) per SATURATED bucket — the hot-boilerplate
             // regime the cap exists for is exactly where every arriving
-            // id paid a full 1000-element walk (StreamBench
-            // neardup_hot_bucket pins the regime's throughput)
+            // id paid a full 1000-element walk (the hot-bucket regime's
+            // throughput is in OPTIMIZATION_r15.md §8)
             val seenSet = seen.toSet
             // deterministic within-batch order; iterator order is not
             val fresh = rows.map(_._1).toSeq.distinct.sorted

@@ -11,7 +11,6 @@ class DeflateRatioSpec extends SparkSpec {
   import spark.implicits._
 
   private def ratios(texts: Seq[String], parts: Int = 2): Seq[Double] = {
-    graft.GraftFunctions.registerAll(spark)
     texts.zipWithIndex.map { case (t, i) => (i, t) }
       .toDF("id", "text").repartition(parts)
       .select(col("id"), TextFunctions.compressionRatio(col("text")).as("r"))
@@ -31,7 +30,6 @@ class DeflateRatioSpec extends SparkSpec {
   }
 
   test("bounds, empty, and null") {
-    graft.GraftFunctions.registerAll(spark)
     val out = Seq((0, ""), (1, "a"), (2, null: String))
       .toDF("id", "text")
       .select(col("id"), TextFunctions.compressionRatio(col("text")).as("r"))

@@ -8,7 +8,6 @@ import graft.SparkSpec
 class TermCountsSpec extends SparkSpec {
 
   test("term_counts skips null elements and counts the rest") {
-    graft.GraftFunctions.registerAll(spark)
     val rows = spark.sql(
       """SELECT term_counts(array('a', CAST(NULL AS STRING), 'b', 'a')) AS tc,
         |       term_counts(CAST(NULL AS ARRAY<STRING>)) AS tnull,

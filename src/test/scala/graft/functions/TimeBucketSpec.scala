@@ -1,13 +1,12 @@
 package graft.functions
 
-import graft.{GraftFunctions, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class TimeBucketSpec extends SparkSpec {
   import graft.functions.TimeBucket.time_bucket
 
   private def bucketOf(tsUs: Long, n: Int, unit: String): Long = {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val df = Seq(tsUs).toDF("us")
       .select(time_bucket(expr(s"INTERVAL '$n' $unit"), timestamp_micros(col("us"))).as("b"))
@@ -30,7 +29,6 @@ class TimeBucketSpec extends SparkSpec {
   }
 
   test("SQL registration works and codegen path evaluates") {
-    GraftFunctions.registerAll(spark)
     graft.Tables.registerAll(spark, "/root/testdata/sf0.001")
     val n = spark.sql(
       """SELECT time_bucket(INTERVAL '1' HOUR, ts) AS b, COUNT(*) AS n

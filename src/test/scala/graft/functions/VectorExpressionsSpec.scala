@@ -11,7 +11,6 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("native cosine == HOF cosine across random float vectors") {
     import spark.implicits._
-    graft.GraftFunctions.registerAll(spark)
     val rnd = new scala.util.Random(7)
     val df = (0 until 500).map { i =>
       (i.toLong,
@@ -29,7 +28,6 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("native lsh_bucket == HOF bucket for all bands") {
     import spark.implicits._
-    graft.GraftFunctions.registerAll(spark)
     val rnd = new scala.util.Random(11)
     val df = (0 until 300).map { i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() * 2 - 1))
@@ -45,7 +43,6 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("native rand_project == HOF projection, element for element") {
     import spark.implicits._
-    graft.GraftFunctions.registerAll(spark)
     val rnd = new scala.util.Random(13)
     val df = (0 until 300).map { i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() * 2 - 1))
@@ -61,7 +58,6 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("native cosine handles unit and null cases") {
     import spark.implicits._
-    graft.GraftFunctions.registerAll(spark)
     val df = Seq(
       (Array(1.0f, 0.0f), Array(1.0f, 0.0f), 1.0),
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f), 0.0),

@@ -16,8 +16,6 @@ import org.apache.spark.sql.functions._
   */
 class AnnRecallSpec extends SparkSpec {
 
-  graft.GraftFunctions.registerAll(spark)
-
   private val K = 10
   private val NQ = 20
 

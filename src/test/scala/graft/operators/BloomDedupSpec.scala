@@ -47,7 +47,6 @@ class BloomDedupSpec extends SparkSpec {
 
   test("prune property: at fpp 0.01 nearly all new docs miss the bloom") {
     val (hist, batch) = corpus()
-    graft.GraftFunctions.registerAll(spark)
     val histFp = hist.select(
       graft.functions.TextFunctions.charFingerprint(col("text")).as("fp"))
     val bloom = histFp.stat.bloomFilter("fp", 40, 0.01)

@@ -23,7 +23,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("greedy encoding applies lowest-rank merges first") {
-    graft.GraftFunctions.registerAll(spark)
     val model = Bpe.learn(Seq(corpus).toDF("text"), "text", numMerges = 4)
     val pieces = Seq("newest", "low lower")
       .toDF("text")
@@ -35,7 +34,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("encoding is lossless: concatenated pieces minus EOW = input words") {
-    graft.GraftFunctions.registerAll(spark)
     val model = Bpe.learn(Seq(corpus).toDF("text"), "text", numMerges = 3)
     val texts = Seq("newest widest low", "unseen tokens also work")
     val joined = texts.toDF("text")
@@ -48,7 +46,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("piece counts shrink (weakly) as the merge table grows") {
-    graft.GraftFunctions.registerAll(spark)
     val df = Seq(corpus).toDF("text")
     val counts = Seq(0, 2, 4, 8).map { n =>
       val m = Bpe.learn(df, "text", numMerges = n)
@@ -69,7 +66,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("empty and whitespace-only text encode to zero pieces") {
-    graft.GraftFunctions.registerAll(spark)
     val model = Bpe.Model(Seq(("a", "b")))
     val out = Seq("", "   ").toDF("text")
       .select(Bpe.countExpr(col("text"), model)).as[Int].collect()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Pins containment semantics (subset duplicates score 1.0 where Jaccard
@@ -8,6 +9,28 @@ import org.apache.spark.sql.functions._
   * evidence loss when hot), and layout determinism. */
 class ContainmentDedupSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Deterministic sparse corpus: `nDocs` docs × 40 tokens drawn
+    * log-uniformly from a `vocab`-sized id space (heavy head, long rare
+    * tail — the Zipf-like shape), plus a superset twin (doc + 10
+    * doc-specific header tokens) for every 100th doc. Pure column
+    * expressions over spark.range: deterministic, distributed, no
+    * driver-side data. */
+  private def sparseCorpus(nDocs: Long, vocab: Long): DataFrame = {
+    def word(i: Column): Column = {
+      val u = pmod(hash(col("id") * lit(101L) + i), lit(1000003)) / lit(1000003.0)
+      concat(lit("w"), floor(pow(lit(vocab.toDouble), u)).cast("long"))
+    }
+    val base = spark.range(nDocs).select(col("id").as("doc_id"),
+      array_join(transform(sequence(lit(0), lit(39)), i => word(i)), " ").as("text"))
+    // twin = full original text + unique header: containment(smaller)=1.0
+    val twins = base.where(col("doc_id") % 100 === 0)
+      .select((col("doc_id") + nDocs).as("doc_id"),
+        concat(col("text"), lit(" "),
+          array_join(transform(sequence(lit(0), lit(9)), j =>
+            concat(lit("h"), col("doc_id"), lit("_"), j)), " ")).as("text"))
+    base.unionAll(twins)
+  }
 
   test("planted subset doc scores containment 1.0 where Jaccard dilutes") {
     val core = (0 until 12).map(i => s"core$i").mkString(" ")
@@ -94,10 +117,9 @@ class ContainmentDedupSpec extends SparkSpec {
     val denseEst = ContainmentDedup.estimate(dense, "doc_id", "text", 2, 0.8)
     assert(!denseEst.usePrefix,
       s"dense corpus must choose naive: $denseEst")
-    // sparse Zipfian corpus with planted superset twins (the profiler's
-    // generated fixture, small): the rare tail dominates, so the
-    // cardinality RATIO signals prefix...
-    val sparse = graft.examples.ProfileQ113.sparseCorpus(spark, 1500L, 100000L)
+    // sparse Zipfian corpus with planted superset twins (small): the
+    // rare tail dominates, so the cardinality RATIO signals prefix...
+    val sparse = sparseCorpus(1500L, 100000L)
       .localCheckpoint()
     val sparseEst = ContainmentDedup.estimate(sparse, "doc_id", "text", 2, 0.8)
     assert(sparseEst.prefixJoinRows < 0.25 * sparseEst.naiveJoinRows,
@@ -220,7 +242,6 @@ class ContainmentDedupSpec extends SparkSpec {
         "j -> CAST((id * j * 2654435761) % 97 AS BIGINT)))) AS a",
       "sort_array(array_distinct(transform(sequence(1, 1 + CAST(id % 23 AS INT)), " +
         "j -> CAST((id + j * 40503) % 97 AS BIGINT)))) AS b")
-    graft.GraftFunctions.registerAll(spark)
     val bad = df.selectExpr(
       "sorted_intersect_count(a, b) AS fast",
       "size(array_intersect(a, b)) AS slow")

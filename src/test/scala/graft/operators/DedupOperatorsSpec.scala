@@ -151,7 +151,6 @@ class DedupOperatorsSpec extends SparkSpec {
 
   test("SimHash band blocking finds near-dups that DIFFER in token count") {
     import spark.implicits._
-    graft.GraftFunctions.registerAll(spark)
     // the pair differs by an APPENDED token (14 vs 15 tokens): the old
     // (lang, n_tokens) blocking could never compare these two documents
     val base = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -193,7 +192,6 @@ class DedupOperatorsSpec extends SparkSpec {
   }
 
   test("SimHash of the planted pair is Hamming-close; unrelated pairs are not") {
-    graft.GraftFunctions.registerAll(spark)
     val sh = corpus.select(col("doc_id"), TextFunctions.simhash(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def hd(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -207,7 +205,6 @@ class DedupOperatorsSpec extends SparkSpec {
   }
 
   test("exact Jaccard of planted pair is high, unrelated low") {
-    graft.GraftFunctions.registerAll(spark)
     val toks = corpus.select(col("doc_id"),
       array_distinct(TextFunctions.tokens(col("text"))).as("tk"))
     val a = toks.select(col("doc_id").as("d1"), col("tk").as("t1"))

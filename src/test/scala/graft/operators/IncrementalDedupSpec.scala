@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 
 class IncrementalDedupSpec extends SparkSpec {
 
-  graft.GraftFunctions.registerAll(spark)
-
   private lazy val docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")
 

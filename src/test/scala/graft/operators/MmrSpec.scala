@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   * operator's reason to exist. */
 class MmrSpec extends SparkSpec {
   import spark.implicits._
-  graft.GraftFunctions.registerAll(spark)
 
   private def round8(x: Double): Double =
     BigDecimal(x).setScale(8, BigDecimal.RoundingMode.HALF_UP).toDouble

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 
 class SemanticDedupSpec extends SparkSpec {
 
-  graft.GraftFunctions.registerAll(spark)
-
   private lazy val emb = spark.read
     .parquet("/root/testdata/sf0.001/embeddings.parquet")
 

@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions._
   */
 class SkewGuardSpec extends SparkSpec {
 
-  graft.GraftFunctions.registerAll(spark)
-
   // 2000 docs, every one starting with the same 8-token boilerplate
   // banner (THE viral shingle), followed by unique filler
   private lazy val planted = {

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   * weighted ones separate content. */
 class WeightedSimHashSpec extends SparkSpec {
   import spark.implicits._
-  graft.GraftFunctions.registerAll(spark)
 
   test("equal-df corpus: weighted signatures == unweighted signatures") {
     // disjoint token sets -> every token has df=1 -> constant idf, and

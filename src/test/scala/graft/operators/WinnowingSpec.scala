@@ -21,7 +21,6 @@ class WinnowingSpec extends SparkSpec {
       j => array_min(slice(ph, j, lit(w)))))
 
   test("native winnow_select == literal per-window-min spelling") {
-    graft.GraftFunctions.registerAll(spark)
     val rnd = new scala.util.Random(11)
     val docs = (0 until 200).map { i =>
       (i.toLong, (0 until 5 + rnd.nextInt(60))
@@ -35,7 +34,6 @@ class WinnowingSpec extends SparkSpec {
   }
 
   test("MOSS guarantee: shared run of w+k-1 tokens => shared fingerprint") {
-    graft.GraftFunctions.registerAll(spark)
     val rnd = new scala.util.Random(23)
     // pairs of docs with distinct vocabularies except a planted shared
     // run of exactly W + K - 1 tokens (one full window of shingles)

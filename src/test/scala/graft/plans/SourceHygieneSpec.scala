@@ -12,6 +12,11 @@ import scala.jdk.CollectionConverters._
   * whole-stage codegen for the entire stage containing it, which is a
   * silent 2-10× regression at 100 TB. The grep lives here so a future
   * expression can't quietly take the fallback shortcut.
+  *
+  * Session setup has one home each: sessions are built by
+  * HarnessSession (which installs GraftFunctions as an extension), the
+  * function table is registered by hand only where SparkEntry's
+  * callers may bring their own session (Tables), and the pruning rule is installed only by GraftCatalog.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -28,6 +33,22 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"CodegenFallback found in: ${offenders.mkString(", ")} — implement doGenCode instead")
+  }
+
+  test("session setup lives in one place per concern") {
+    // (pattern, the only file allowed to contain it)
+    val rules = Seq(
+      "SparkSession.builder()" -> "HarnessSession.scala",
+      "GraftFunctions.registerAll(" -> "Tables.scala",
+      "extraOptimizations" -> "TimePartitionPruning.scala",
+      "TimePartitionPruning.install(" -> "GraftCatalog.scala")
+    val offenders = for {
+      p <- mainSources
+      src = new String(Files.readAllBytes(p))
+      (pattern, home) <- rules
+      if src.contains(pattern) && p.getFileName.toString != home
+    } yield s"$pattern in $p (only $home may)"
+    assert(offenders.isEmpty, offenders.mkString("; "))
   }
 
   test("no ??? / TODO / FIXME stubs in src/main") {

@@ -42,6 +42,23 @@ class TimePartitionPruningSpec extends SparkSpec {
     assert(df.count() == 3)
   }
 
+  test("a GraftCatalog on a fresh session installs the rule itself") {
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraOptimizations.contains(TimePartitionPruning),
+      "fixture: a newSession() starts without the rule")
+    val cat = new GraftCatalog(fresh, tmpDir("prune_fresh"))
+    val lp = (0 until 48).map(h => s"m,host=a v=$h.0 ${base + h * H}").mkString("\n")
+    val (pts, _) = LineProtocol.parse(lp, "us")
+    ColumnarBatch.fromPoints(pts).foreach(HourPartitionedWriter.ingest(cat, "default", _))
+    val df = cat.table("default", "m")
+      .where(col("time") >= lit("2024-06-01 05:00:00").cast("timestamp") &&
+             col("time") < lit("2024-06-01 08:00:00").cast("timestamp"))
+    val scan = scanOf(df.select("v"))
+    assert(scan.partitionFilters.exists(_.references.exists(_.name == "hour")),
+      "expected a derived hour bound on the scan")
+    assert(scan.selectedPartitions.partitionCount == 3)
+  }
+
   test("rule never pairs one table's time bound with another table's partition columns") {
     TimePartitionPruning.install(spark)
     import spark.implicits._

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.HarnessSession
+import org.apache.spark.sql.Dataset
 
 import java.io.File
 
@@ -31,12 +32,9 @@ object RestartChild {
 
   def main(args: Array[String]): Unit = {
     val Array(job, phase, inputDir, ckptDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = HarnessSession.builder("2")
       .appName(s"graft-restart-$job-$phase")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("rc_wh").toString)
       .getOrCreate()
