@@ -206,6 +206,6 @@ object Bench {
     }.mkString("[", ",", "]")
     val flaggedCompact = flagged.take(10).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,"iters":$iters,"load_avg_start":$loadStart,"n_queries":${results.size},"queries_order":"sorted_name","queries_sec":$qsCompact,"flagged":$flaggedCompact,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,"iters":$iters,"load_avg_start":$loadStart,"n_queries":${results.size},"queries_order":"sorted_name","queries_sec":$qsCompact,"n_flagged":${flagged.size},"flagged":$flaggedCompact,"sf":"$sfDir"}""")
   }
 }

@@ -60,22 +60,18 @@ object PinKillProbe {
       (pmod(xxhash64(col("id")), lit(997)) + 1).as("w"),
       pmod(xxhash64(col("id"), lit(1)), lit(4096)).as("g"))
 
-    // total weight ≈ 499·n → budget for ~256 shards
-    val shardBudget = math.max(1L, n * 499 / 256)
-
     val ops: Seq[(String, () => DataFrame)] = Seq(
-      // cutoverBytes=0 forces the distributed arms — the probe tests
-      // exactly the pin machinery, never the small-input window path
+      // the named distributed arms — the probe tests exactly the pin
+      // machinery, never the small-input window path; ShardPack's
+      // shard id is per-row arithmetic over these priors
       "shardpack" -> (() =>
-        ShardPack.assign(base, col("k"), col("w"), shardBudget,
-          cutoverBytes = 0L)),
+        ShardPack.distributedPriors(base, col("k"), col("w"))),
       "budgetselect" -> (() =>
         BudgetSelect.distributedSelect(base, col("g"),
           Seq((col("w"), false)), "k", col("w"), lit(n * 499 / 8192))
           .select(col("k"), col("sel_prior"))),
       "globalrank" -> (() =>
-        GlobalRank.withRowNumber(base, Seq(col("w"), col("k")), "rn",
-            cutoverBytes = 0L)
+        GlobalRank.distributedRowNumber(base, Seq(col("w"), col("k")), "rn")
           .select(col("k"), col("rn"))),
       "bestfitpack" -> (() =>
         BestFitPack.pack(base, col("g"), col("k"), col("w"),

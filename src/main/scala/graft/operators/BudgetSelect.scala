@@ -2,10 +2,9 @@ package graft.operators
 
 import graft.Materialize._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Budgeted corpus selection: within each group (source, language,
   * domain, ...) rank rows by a preference order and keep rows while the
@@ -46,7 +45,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * be rebuilt from a foreign SortOrder without private Catalyst
   * constructors — carrying the flag as data keeps the public API only.
   *
-  * Size-adaptive like GlobalRank.ntile: small inputs use the plain
+  * Size-adaptive through [[SizeGate]]: small inputs use the plain
   * window (one sort, no extra passes); both paths produce identical
   * rows (BudgetSelectSpec parity test).
   */
@@ -69,15 +68,12 @@ object BudgetSelect {
     */
   def select(df: DataFrame, groupCol: Column, prefCols: Seq[(Column, Boolean)],
       keyName: String, weightCol: Column, budgetCol: Column,
-      priorCol: String = "sel_prior", partitions: Int = 0,
-      cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes))
+      priorCol: String = "sel_prior"): DataFrame =
+    if (SizeGate.small(df))
       windowSelect(df, groupCol, prefCols, keyName, weightCol, budgetCol, priorCol)
     else
       distributedSelect(df, groupCol, prefCols, keyName, weightCol,
-        budgetCol, priorCol, partitions)
-  }
+        budgetCol, priorCol)
 
   private def dir(c: Column, asc: Boolean): Column = if (asc) c.asc else c.desc
 
@@ -98,11 +94,7 @@ object BudgetSelect {
     * task. */
   def distributedSelect(df: DataFrame, groupCol: Column,
       prefCols: Seq[(Column, Boolean)], keyName: String, weightCol: Column,
-      budgetCol: Column, priorCol: String = "sel_prior",
-      partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p = if (partitions > 0) partitions
-      else spark.sparkContext.defaultParallelism
+      budgetCol: Column, priorCol: String = "sel_prior"): DataFrame = {
     val narrow = df.select(groupCol.as("_g") +:
       prefCols.zipWithIndex.map { case ((c, _), i) => c.as(s"_s$i") } ++:
       Seq(col(keyName).as("_k"),
@@ -113,26 +105,13 @@ object BudgetSelect {
       dir(col(s"_s$i"), asc)
     } :+ col("_k").asc
     val sorted = narrow
-      .repartitionByRange(p, col("_g") +: nOrd: _*)
+      .repartitionByRange(df.sparkSession.sparkContext.defaultParallelism,
+        col("_g") +: nOrd: _*)
       .sortWithinPartitions(col("_g") +: nOrd: _*)
       .materialize() // pins partition contents across the two jobs
-    // one small job: weight per (physical partition, group) — p×G rows
-    val sums = sorted
-      .groupBy(spark_partition_id().as("_pid"), col("_g"))
-      .agg(sum(col("_w")).as("_s"))
-      .collect()
-    // exclusive offsets: scan partitions in order, accumulate per group
-    val acc = scala.collection.mutable.Map.empty[Any, Long]
-    val offsetRows = sums.sortBy(_.getInt(0)).map { r =>
-      val (pid, g, s) = (r.getInt(0), r.get(1), r.getLong(2))
-      val o = acc.getOrElse(g, 0L); acc(g) = o + s
-      Row(pid, g, o)
-    }.toSeq
-    val gField = sorted.schema("_g")
-    val offsets = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsetRows, 1),
-      StructType(Seq(StructField("_pid", IntegerType, nullable = false),
-        gField, StructField("_off", LongType, nullable = false))))
+    // weight per (physical partition, group), accumulated per group
+    val (offsets, _) =
+      GlobalRank.partitionOffsets(sorted, col("_w"), "_off", Seq("_g"))
     // local EXCLUSIVE running sum: each window group is one partition's
     // already-sorted slice of one group — bounded by partition size
     val w = Window.partitionBy(col("_pid"), col("_g")).orderBy(nOrd: _*)

@@ -202,8 +202,12 @@ object ContainmentDedup {
   }
 
   /** Driver-side log2 bucketing of an EXACT census (small vocabularies
-    * only) — bit-identical buckets to [[censusHistogram]]'s
-    * floor(log2(df)), then the same cumulation. */
+    * only), then the same cumulation. The integer bucket equals
+    * [[censusHistogram]]'s SQL floor(log2(df)) for df < 2^48 − 1
+    * (ContainmentDedupSpec checks 2^k − 1, 2^k, 2^k + 1 for k ≤ 47);
+    * from k = 48 the double quotient log(2^k − 1)/log(2) rounds up to
+    * k, one bucket above this one — a document frequency no corpus
+    * reaches. */
   private[operators] def estimateFromDfs(dfs: Array[Long], nDocs: Long,
       minContainment: Double): StrategyEstimate = {
     val buckets = dfs.groupBy(d => 63L - java.lang.Long.numberOfLeadingZeros(d))

@@ -34,77 +34,86 @@ import org.apache.spark.sql.functions._
   */
 object DedupClusters {
 
+  /** Below this many distinct edges the driver union-finds them. */
+  private val DriverMaxEdges = 1 << 20
+  /** Star-contraction rounds before giving up. */
+  private val MaxRounds = 25
+
   /** Connected components of an undirected edge list.
     *
     * Size-adaptive like [[GlobalRank]]: strictly below
-    * `driverCutoverEdges` the edge list is union-found on the driver
-    * (one short collect of the already-checkpointed, deduped edges — a
-    * near-dup graph that small pays 4-5 rounds of job scheduling for
-    * nothing); at or above it, the star contraction runs fully
-    * distributed and the driver never sees an edge. The dedup shuffle
-    * is pinned by ONE checkpoint either way; the probe reads local
-    * checkpoint blocks only, and is skipped entirely when the cutover
-    * is 0.
+    * `DriverMaxEdges` distinct edges the edge list is union-found on the
+    * driver (one short collect of the deduped edges — a near-dup graph
+    * that small pays 4-5 rounds of job scheduling for nothing); at or
+    * above it, [[distributedComponents]]' star contraction runs and the
+    * driver never sees an edge.
     *
     * @param edges  two numeric columns; self-loops ignored
-    * @param driverCutoverEdges  0 forces the distributed path (specs pin
-    *        both paths against each other and the recursive-CTE oracle)
     * @return (node LONG, component LONG) — component = min node id in the
     *         connected component; one row per non-isolated node
     */
-  def components(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIterations: Int = 25, driverCutoverEdges: Long = 1L << 20): DataFrame = {
-    val deduped = edges
+  def components(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    probed(edges, srcCol, dstCol, DriverMaxEdges)
+
+  /** The star-contraction arm of [[components]], whatever the edge
+    * count (specs pin it against the driver union-find; ClusterKillProbe
+    * kills executors under it). */
+  def distributedComponents(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    contract(dedup(edges, srcCol, dstCol).materialize())
+
+  private def dedup(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
 
-    // Which side of the checkpoint the path probe runs on is gated by
-    // the plan estimate (r15, ADVICE r14). r14 always probed the
-    // UN-checkpointed frame: one action decided the path AND delivered
-    // the small case, but on a LARGE graph the probe's limit only caps
-    // the collect — the distinct's full map side still ran, and the
-    // materialize then recomputed the whole distinct (shuffle reuse
-    // does not span actions): the scale path paid its dedup shuffle
-    // twice. Probing the checkpoint instead costs the small case an
-    // extra job (+0.15 s on q75's bench row). So:
-    //  - estimate reads small: probe direct (r14's one-action fast
-    //    path). A lying under-estimate here wastes one bounded distinct
-    //    map side on a mid-size graph — anything whose estimate fits
-    //    under the cutover is nowhere near the 100 TB regime even at a
-    //    10x parquet-compression lie.
-    //  - estimate reads large: materialize FIRST (the dedup shuffle is
-    //    pinned once — the checkpoint is the barrier the iterative
-    //    contraction needs anyway), then probe the local checkpoint
-    //    blocks, which also catches over-estimated tiny graphs cheaply
-    //    (join-derived edge frames err huge).
-    val cap = math.min(driverCutoverEdges, Int.MaxValue.toLong).toInt
-    val estBytes = deduped.queryExecution.optimizedPlan.stats.sizeInBytes
-    val estSmall = estBytes >= 0 &&
-      estBytes < BigInt(GlobalRank.WindowCutoverBytes)
-    if (driverCutoverEdges > 0 && estSmall) {
-      val probe = deduped.limit(cap).collect()
-      if (probe.length < driverCutoverEdges)
-        return driverComponentsRows(deduped.sparkSession, probe)
-    }
-    var e = deduped.materialize()
-    if (driverCutoverEdges > 0 && !estSmall) {
-      val probe = e.limit(cap).collect()
-      if (probe.length < driverCutoverEdges)
-        return driverComponentsRows(e.sparkSession, probe)
-    }
+  /** Probes up to `cap` deduped edges: fewer go to the driver
+    * union-find, otherwise the star contraction runs.
+    *
+    * Which side of the checkpoint the probe runs on is gated by
+    * [[SizeGate]] (r15, ADVICE r14). r14 always probed the
+    * UN-checkpointed frame: one action decided the path AND delivered
+    * the small case, but on a LARGE graph the probe's limit only caps
+    * the collect — the distinct's full map side still ran, and the
+    * materialize then recomputed the whole distinct (shuffle reuse does
+    * not span actions): the scale path paid its dedup shuffle twice.
+    * Probing the checkpoint instead costs the small case an extra job
+    * (+0.15 s on q75's bench row). So:
+    *  - estimate reads small: probe direct (r14's one-action fast path).
+    *    A lying under-estimate here wastes one bounded distinct map side
+    *    on a mid-size graph, then contracts the checkpoint — the result
+    *    is the same (DedupClustersSpec pins it with a small cap).
+    *  - estimate reads large: materialize FIRST (the dedup shuffle is
+    *    pinned once — the checkpoint is the barrier the iterative
+    *    contraction needs anyway), then probe the local checkpoint
+    *    blocks, which also catches over-estimated tiny graphs cheaply
+    *    (join-derived edge frames err huge). */
+  private[operators] def probed(edges: DataFrame, srcCol: String,
+      dstCol: String, cap: Int): DataFrame = {
+    val deduped = dedup(edges, srcCol, dstCol)
+    lazy val pinned = deduped.materialize()
+    val probe = (if (SizeGate.small(deduped)) deduped else pinned)
+      .limit(cap).collect()
+    if (probe.length < cap) driverComponents(deduped.sparkSession, probe)
+    else contract(pinned)
+  }
 
+  /** Star contraction to the fixpoint over checkpointed, deduped edges. */
+  private def contract(deduped: DataFrame): DataFrame = {
+    var e = deduped
     var converged = false
     var iter = 0
     var fp = fingerprint(e)
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < MaxRounds) {
       e = smallStar(largeStar(e)).materialize()
       val fp2 = fingerprint(e)
       converged = fp2 == fp
       fp = fp2
       iter += 1
     }
-    require(converged, s"connected components did not converge in $maxIterations rounds")
+    require(converged, s"connected components did not converge in $MaxRounds rounds")
     // fixpoint graph is a forest of stars: every non-root points at its
     // component minimum; roots are the mins themselves
     e.select(col("u").as("node"), col("v").as("component"))
@@ -114,11 +123,8 @@ object DedupClusters {
 
   /** Path-compressed union-find with the smaller id as root, so each
     * root IS its component's minimum — the same contract as the star
-    * contraction. Used below the size cutover only. */
-  private def driverComponents(e: DataFrame): DataFrame =
-    driverComponentsRows(e.sparkSession, e.collect())
-
-  private def driverComponentsRows(spark: org.apache.spark.sql.SparkSession,
+    * contraction. Used below the driver edge cap only. */
+  private def driverComponents(spark: org.apache.spark.sql.SparkSession,
       rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {

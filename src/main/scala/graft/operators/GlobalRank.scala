@@ -29,24 +29,35 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   */
 object GlobalRank {
 
+  /** Exclusive offsets of `weight` per physical partition (and per
+    * `group` value), accumulated in partition order over a checkpointed
+    * range-sorted frame: ONE small job (p×G result rows), then a
+    * (`_pid`, group..., `offCol`) frame to broadcast. A partition with
+    * no rows gets no offset: it has nothing to stamp. Also returns the
+    * grand total. */
+  private[operators] def partitionOffsets(sorted: DataFrame, weight: Column,
+      offCol: String, group: Seq[String] = Nil): (DataFrame, Long) = {
+    val spark = sorted.sparkSession
+    val sums = sorted.groupBy(spark_partition_id() +: group.map(col): _*)
+      .agg(sum(weight)).collect().sortBy(_.getInt(0))
+    val acc = scala.collection.mutable.Map.empty[Seq[Any], Long]
+    val offsetRows = sums.toSeq.map { r =>
+      val g = group.indices.map(i => r.get(1 + i))
+      val o = acc.getOrElse(g, 0L); acc(g) = o + r.getLong(1 + group.size)
+      Row.fromSeq((r.getInt(0) +: g) :+ o)
+    }
+    val schema = StructType((StructField("_pid", IntegerType, nullable = false)
+      +: group.map(sorted.schema(_))) :+ StructField(offCol, LongType, nullable = false))
+    (spark.createDataFrame(spark.sparkContext.parallelize(offsetRows, 1), schema),
+      acc.values.sum)
+  }
+
   /** Per-partition offsets + columnar row-number stamp over an already
     * range-partitioned, partition-sorted, checkpointed input. Returns
     * the stamped frame and the total row count (free from the counts). */
   private def stamp(sorted: DataFrame, rnCol: String): (DataFrame, Long) = {
-    val spark = sorted.sparkSession
-    // one small job: rows per partition id (p result rows)
-    val counts: Map[Int, Long] = sorted
-      .groupBy(spark_partition_id().as("_pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val nParts = sorted.queryExecution.toRdd.getNumPartitions
-    var off = 0L
-    val offsetRows = (0 until nParts).map { pid =>
-      val o = off; off += counts.getOrElse(pid, 0L); Row(pid, o)
-    }
-    val offsetsDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(offsetRows, 1),
-      StructType(Seq(StructField("_pid", IntegerType, nullable = false),
-        StructField("_offset", LongType, nullable = false))))
+    // rows per partition id
+    val (offsetsDf, n) = partitionOffsets(sorted, lit(1L), "_offset")
     // local index = mid - (pid << 33); mid assignment follows iteration
     // order, which for the checkpointed sorted partition is sort order
     val out = sorted
@@ -56,82 +67,67 @@ object GlobalRank {
       .join(broadcast(offsetsDf), "_pid")
       .withColumn(rnCol, col("_offset") + col("_lrn") + lit(1L))
       .select(sorted.columns.map(col) :+ col(rnCol): _*)
-    (out, off)
+    (out, n)
   }
 
-  private def rangeSorted(df: DataFrame, sortCols: Seq[Column],
-      partitions: Int): DataFrame = {
-    val p = if (partitions > 0) partitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    df.repartitionByRange(p, sortCols: _*)
+  private def rangeSorted(df: DataFrame, sortCols: Seq[Column]): DataFrame =
+    df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism,
+        sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .materialize() // pins partition contents/order across the
                          // counts job and the stamp job
-  }
 
   /** `df` + a global row-number column (1-based, ordered by sortCols).
     *
-    * Size-adaptive like [[ntile]] (r14): inputs whose plan-estimated
-    * size fits one task use the plain window `row_number` — one sort,
-    * zero extra jobs, where the distributed shape pays a range
-    * exchange, a checkpoint barrier, and a per-partition counts job
-    * (3+ jobs of fixed latency). Larger inputs keep the offset-stamping
-    * shape, which never gathers the table into a single task. Identical
-    * output both ways for any deterministic total order (callers
-    * tie-break their sort keys; GlobalRankSpec pins parity). */
+    * Size-adaptive like [[ntile]] (r14): inputs that [[SizeGate]] reads
+    * small use the plain window `row_number` — one sort, zero extra
+    * jobs, where the distributed shape pays a range exchange, a
+    * checkpoint barrier, and a per-partition counts job (3+ jobs of
+    * fixed latency). Larger inputs take [[distributedRowNumber]].
+    * Identical output both ways for any deterministic total order
+    * (callers tie-break their sort keys; GlobalRankSpec pins parity). */
   def withRowNumber(df: DataFrame, sortCols: Seq[Column],
-      rnCol: String = "rn", partitions: Int = 0,
-      cutoverBytes: Long = WindowCutoverBytes): DataFrame = {
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes)) {
+      rnCol: String = "rn"): DataFrame =
+    if (SizeGate.small(df)) {
       val w = org.apache.spark.sql.expressions.Window.orderBy(sortCols: _*)
       df.withColumn(rnCol, row_number().over(w).cast("long"))
-    } else stamp(rangeSorted(df, sortCols, partitions), rnCol)._1
-  }
+    } else distributedRowNumber(df, sortCols, rnCol)
 
-  /** Default size cutover: below this the single-task window sort is
-    * cheaper than the multi-pass distributed stamping.
-    *
-    * CAVEAT (ADVICE r14): `optimizedPlan.stats.sizeInBytes` reads
-    * on-disk COMPRESSED bytes for parquet-scan-rooted plans, and wide
-    * text columns commonly decompress 3-10x — a ~250 MB-compressed
-    * corpus can route into the window arm and sort 1-2.5 GB in one
-    * task (slow, spilling, but exact: Spark's sorts are external).
-    * Callers ranking wide text should pass a lower `cutoverBytes`;
-    * non-scan-rooted estimates (joins, unknown RDDs) err HUGE, so the
-    * misroute only happens in this compressed-scan direction. Every
-    * dispatched composition in this repo ranks narrow projections
-    * (ids, counts, weights), where the factor is small. */
-  val WindowCutoverBytes: Long = 256L * 1024 * 1024
+  /** The offset-stamping arm of [[withRowNumber]], whatever the input
+    * size: never gathers the table into a single task. */
+  def distributedRowNumber(df: DataFrame, sortCols: Seq[Column],
+      rnCol: String = "rn"): DataFrame =
+    stamp(rangeSorted(df, sortCols), rnCol)._1
 
   /** Exact NTILE(k) over a global ordering.
     *
-    * Size-adaptive: inputs whose plan-estimated size fits comfortably in
-    * one task (< `cutoverBytes`) use the plain window (one sort, no
-    * extra passes — faster at small scale); larger inputs switch to the
-    * distributed offset-stamping shape, which never gathers the table
-    * into a single task. Both produce identical results
+    * Size-adaptive: inputs that [[SizeGate]] reads small use the plain
+    * window (one sort, no extra passes — faster at small scale); larger
+    * inputs take [[distributedNtile]]. Both produce identical results
     * (GlobalRankSpec). */
   def ntile(df: DataFrame, sortCols: Seq[Column], k: Int,
-      bucketCol: String = "bucket", partitions: Int = 0,
-      cutoverBytes: Long = WindowCutoverBytes): DataFrame = {
+      bucketCol: String = "bucket"): DataFrame = {
     require(k > 0, "k must be positive")
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes)) {
+    if (SizeGate.small(df)) {
       val w = org.apache.spark.sql.expressions.Window.orderBy(sortCols: _*)
       df.withColumn(bucketCol, org.apache.spark.sql.functions.ntile(k).over(w))
-    } else {
-      val (withRn, n) = stamp(rangeSorted(df, sortCols, partitions), "_grn")
-      // NTILE semantics: first (n % k) buckets hold ceil(n/k) rows
-      val base = n / k
-      val rem = n % k
-      val bigCut = (base + 1) * rem
-      val grn = col("_grn")
-      val bucket =
-        if (base == 0) grn.cast("int") // fewer rows than buckets
-        else when(grn <= bigCut, ((grn - 1) / (base + 1)).cast("int") + 1)
-          .otherwise((lit(rem) + (grn - bigCut - 1) / base).cast("int") + 1)
-      withRn.withColumn(bucketCol, bucket).drop("_grn")
-    }
+    } else distributedNtile(df, sortCols, k, bucketCol)
+  }
+
+  /** The offset-stamping arm of [[ntile]], whatever the input size. */
+  def distributedNtile(df: DataFrame, sortCols: Seq[Column], k: Int,
+      bucketCol: String = "bucket"): DataFrame = {
+    require(k > 0, "k must be positive")
+    val (withRn, n) = stamp(rangeSorted(df, sortCols), "_grn")
+    // NTILE semantics: first (n % k) buckets hold ceil(n/k) rows
+    val base = n / k
+    val rem = n % k
+    val bigCut = (base + 1) * rem
+    val grn = col("_grn")
+    val bucket =
+      if (base == 0) grn.cast("int") // fewer rows than buckets
+      else when(grn <= bigCut, ((grn - 1) / (base + 1)).cast("int") + 1)
+        .otherwise((lit(rem) + (grn - bigCut - 1) / base).cast("int") + 1)
+    withRn.withColumn(bucketCol, bucket).drop("_grn")
   }
 }

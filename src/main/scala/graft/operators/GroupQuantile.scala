@@ -18,16 +18,17 @@ import org.apache.spark.sql.functions._
   * Spark's sorts are external (UnsafeExternalSorter) and spill, so rank
   * selection over a shuffle-sort survives any group size.
   *
-  * Two shapes, size-adaptive like [[GlobalRank.ntile]]:
+  * Two shapes, chosen by [[SizeGate]]:
   *  - small inputs: one per-group window (`row_number` + an unordered
   *    `count` sharing the same exchange). The window's buffer is the
   *    spillable ExternalAppendOnlyUnsafeRowBuffer — still no OOM bound,
   *    but a hot group is one task.
-  *  - large inputs: [[GlobalRank.withRowNumber]] over (group, value) —
-  *    a range exchange whose sampled bounds SPLIT hot groups across
-  *    partitions, then per-group ranks recovered as global_rn − offset
-  *    via a per-group offsets frame (one row per group, broadcast-sized
-  *    by the op's own contract: the selection output is per-group too).
+  *  - large inputs: [[GlobalRank.distributedRowNumber]] over (group,
+  *    value) — a range exchange whose sampled bounds SPLIT hot groups
+  *    across partitions, then per-group ranks recovered as
+  *    global_rn − offset via a per-group offsets frame (one row per
+  *    group, broadcast-sized by the op's own contract: the selection
+  *    output is per-group too).
   *
   * Both shapes produce identical results (GroupQuantileSpec) and neither
   * holds a group in an aggregation buffer.
@@ -41,51 +42,45 @@ object GroupQuantile {
     * k=20 → P05. */
   def rank(n: Column, k: Long): Column = idiv(n + lit(k - 1), lit(k))
 
-  /** `df` + per-group rank (`rnkCol`, 1-based by `valueCol` ascending,
+  /** `df` + per-group rank (`_rnk`, 1-based by `valueCol` ascending,
     * ties arbitrary — any tie order selects the same value at a given
-    * rank) + per-group size (`nCol`). */
-  def withGroupRank(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      rnkCol: String = "_rnk", nCol: String = "_n",
-      cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
-    val g = groupCols.map(col)
-    val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= 0 && estBytes < BigInt(cutoverBytes)) {
+    * rank) + per-group size (`_n`). [[SizeGate]] picks the window arm
+    * or [[distributedGroupRank]]. */
+  def withGroupRank(df: DataFrame, groupCols: Seq[String],
+      valueCol: String): DataFrame =
+    if (SizeGate.small(df)) {
+      val g = groupCols.map(col)
       val wOrd = Window.partitionBy(g: _*).orderBy(col(valueCol))
       val wAll = Window.partitionBy(g: _*)
-      df.withColumn(rnkCol, row_number().over(wOrd))
-        .withColumn(nCol, count(lit(1)).over(wAll))
-    } else {
-      // cutoverBytes = 0: the inner rank must be FORCED onto the
-      // distributed stamp. Letting withRowNumber re-dispatch on the
-      // same plan estimate that routed us here is self-defeating: when
-      // THIS arm was chosen because the estimate lies low (compressed
-      // text scans read 3-10x under their in-memory size — ADVICE r14),
-      // withRowNumber would see the same low estimate and pick its
-      // empty-PARTITION-BY window = the whole table sorted in ONE task,
-      // duplicated once more under the offsets aggregate (no exchange
-      // reuse across differently-pruned consumers). Measured at sf1
-      // (35 MB estimate, forced big arm): 38.5 s as a doubled
-      // single-task global window vs 6.1 s with the stamp forced —
-      // back at parity with the per-group window arm locally, and the
-      // stamp arm is the only one that parallelizes past #groups tasks.
-      val stamped = GlobalRank.withRowNumber(df, g :+ col(valueCol), "_grn",
-        cutoverBytes = 0L)
-      // one row per group; AQE broadcasts it when it is small (it is,
-      // by the op's contract — the final report is per-group too).
-      // Null-safe join keys (<=>): a plain equi-join would DROP rows
-      // whose group key is null while the window shape above keeps
-      // them — results must not diverge by input size.
-      val offs = stamped.groupBy(g: _*)
-        .agg(min(col("_grn")).as("_off"), count(lit(1)).as(nCol))
-      val offsR = offs.select(
-        (groupCols.map(c => col(c).as(s"_r_$c")) :+
-          col("_off") :+ col(nCol)): _*)
-      val cond = groupCols.map(c => col(c) <=> col(s"_r_$c")).reduce(_ && _)
-      stamped.join(offsR, cond)
-        .withColumn(rnkCol, col("_grn") - col("_off") + lit(1L))
-        .drop(groupCols.map(c => s"_r_$c"): _*)
-        .drop("_grn", "_off")
-    }
+      df.withColumn("_rnk", row_number().over(wOrd))
+        .withColumn("_n", count(lit(1)).over(wAll))
+    } else distributedGroupRank(df, groupCols, valueCol)
+
+  /** The GlobalRank arm of [[withGroupRank]], whatever the input size.
+    * It stamps through [[GlobalRank.distributedRowNumber]] directly: the
+    * estimate that may have routed here by lying low (compressed text
+    * scans) is never re-read, so a hot group is never sorted in one
+    * task (measured at sf1: 38.5 s as a doubled single-task global
+    * window vs 6.1 s stamped). */
+  def distributedGroupRank(df: DataFrame, groupCols: Seq[String],
+      valueCol: String): DataFrame = {
+    val g = groupCols.map(col)
+    val stamped = GlobalRank.distributedRowNumber(df, g :+ col(valueCol), "_grn")
+    // one row per group; AQE broadcasts it when it is small (it is,
+    // by the op's contract — the final report is per-group too).
+    // Null-safe join keys (<=>): a plain equi-join would DROP rows
+    // whose group key is null while the window shape above keeps
+    // them — results must not diverge by input size.
+    val offs = stamped.groupBy(g: _*)
+      .agg(min(col("_grn")).as("_off"), count(lit(1)).as("_n"))
+    val offsR = offs.select(
+      (groupCols.map(c => col(c).as(s"_r_$c")) :+
+        col("_off") :+ col("_n")): _*)
+    val cond = groupCols.map(c => col(c) <=> col(s"_r_$c")).reduce(_ && _)
+    stamped.join(offsR, cond)
+      .withColumn("_rnk", col("_grn") - col("_off") + lit(1L))
+      .drop(groupCols.map(c => s"_r_$c"): _*)
+      .drop("_grn", "_off")
   }
 
   /** One row per group: groupCols, `nCol` = group size, and for each
@@ -93,11 +88,16 @@ object GroupQuantile {
     * Rank expressions must land in [1, n] (they do for the
     * (n + k − 1) div k family). */
   def selectRanks(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      picks: Seq[(String, Column => Column)], nCol: String = "n",
-      cutoverBytes: Long = GlobalRank.WindowCutoverBytes): DataFrame = {
+      picks: Seq[(String, Column => Column)], nCol: String = "n"): DataFrame =
+    selectRanked(withGroupRank(df, groupCols, valueCol), groupCols, valueCol,
+      picks, nCol)
+
+  /** [[selectRanks]] over a frame already ranked by either arm of
+    * [[withGroupRank]]. */
+  private[operators] def selectRanked(ranked: DataFrame,
+      groupCols: Seq[String], valueCol: String,
+      picks: Seq[(String, Column => Column)], nCol: String = "n"): DataFrame = {
     require(picks.nonEmpty, "at least one rank pick required")
-    val ranked = withGroupRank(df, groupCols, valueCol,
-      cutoverBytes = cutoverBytes)
     val tagged = picks.foldLeft(ranked) { case (d, (name, f)) =>
       d.withColumn(name,
         when(col("_rnk") === f(col("_n")), col(valueCol)))

@@ -40,8 +40,8 @@ import org.apache.spark.sql.types._
   * Scale notes: media rows are large — the entry point re-partitions by
   * a target bytes-per-partition budget before mapping, so a 100 TB media
   * table becomes many bounded tasks instead of a few OOM-ing ones; the
-  * per-partition iterator processes rows in bounded batches (no
-  * whole-partition materialization).
+  * per-partition iterator maps one row at a time (no whole-partition
+  * materialization).
   */
 object Multimodal {
 
@@ -529,12 +529,6 @@ object Multimodal {
     }
   }
 
-  /** Decode + feature-extract over a media DataFrame
-    * (media_id, bytes, format), batched per partition.
-    *
-    * Partition count comes from Catalyst's size estimate for the input
-    * plan (file-scan bytes for tables) — metadata only, no `count()`
-    * scan of the media table just to size partitions. */
   /** Spread a bytes-heavy media frame so the CPU-bound decode runs at
     * cluster width, not input-split width (a 100 GB table loaded from a
     * few parquet splits would otherwise decode on a handful of tasks). */
@@ -551,17 +545,16 @@ object Multimodal {
     }
   }
 
+  /** Decode + feature-extract over a media DataFrame (media_id, bytes,
+    * format). The partition count comes from Catalyst's size estimate
+    * (file-scan bytes for tables) — metadata only, no `count()` scan of
+    * the media table just to size partitions. */
   def extractFeatures(media: DataFrame,
-      targetBytesPerPartition: Long = 128L * 1024 * 1024,
-      batchRows: Int = 64): DataFrame = {
+      targetBytesPerPartition: Long = 128L * 1024 * 1024): DataFrame = {
     val repartitioned = byBytesBudget(media, targetBytesPerPartition)
     val enc = RowEncoder.encoderFor(FeatureSchema)
     // plain streaming map: one row in, one row out, never more than one
-    // decoded raster live per task. (batchRows is retained in the
-    // signature for source compatibility; an earlier grouped() layer
-    // materialized each batch as a Seq only to re-flatten it — pure
-    // allocation, no vectorization to amortize.)
-    val _ = batchRows
+    // decoded raster live per task
     repartitioned.select("media_id", "bytes", "format").mapPartitions { it =>
       it.map { r =>
         val id = r.getLong(0)

@@ -39,10 +39,10 @@ object SequencePack {
 
   /** Segment map (`seq_id`, `key`, `seq_off`, `doc_off`, `n_toks`). */
   def segments(docs: DataFrame, keyCol: Column, weightCol: Column,
-      seqLen: Long, partitions: Int = 0): DataFrame = {
+      seqLen: Long): DataFrame = {
     require(seqLen > 0, s"sequence length must be positive, got $seqLen")
     val L = lit(seqLen)
-    ShardPack.priors(docs, keyCol, weightCol, partitions)
+    ShardPack.priors(docs, keyCol, weightCol)
       .where(col("_w") > 0L)
       .select(col("_k"), col("_w"), col("_prior"),
         explode(expr(

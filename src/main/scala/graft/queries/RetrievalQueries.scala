@@ -4,7 +4,7 @@ import graft.Materialize._
 
 import graft.functions.TextFunctions.tokens
 import graft.functions.VectorFunctions.{cosine, cosineSql}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -197,59 +197,66 @@ object RetrievalQueries {
 
   /** q145 kernel: exact phrase search over a positional inverted index,
     * self-contained via a trigram census (the demo phrase is the
-    * corpus's own most frequent trigram). SIZE-ADAPTIVE census (r15):
+    * corpus's own most frequent trigram). The census is SIZE-ADAPTIVE
+    * (r15) through [[graft.operators.SizeGate]]:
     *
-    *  - BELOW `cutoverBytes` (plan-estimated input size): tokenize into
-    *    the exploded postings once, census trigrams via a per-doc
-    *    window (two leads). Measured the local winner — sf1 A/B in one
-    *    session: window 3.36 s vs zip_with-over-arrays 4.20 s (min of
-    *    3; r14 had shipped the array shape un-gated and regressed sf1
-    *    2.91 → 4.40 s).
-    *  - ABOVE: tokenize into checkpointed per-doc ARRAYS; census
-    *    trigrams from zip_with over three shifted slices — pure per-row
-    *    compute into the aggregate's map-side partials, deleting the
-    *    full shuffle+sort of the token stream that the window arm pays
-    *    (the trigram-partials exchange remains in BOTH arms, so above
-    *    the cutover the array arm strictly shuffles less).
+    *  - small input, [[windowCensus]]: tokenize into the exploded
+    *    postings once, census trigrams via a per-doc window (two
+    *    leads). Measured the local winner — sf1 A/B, back to back:
+    *    window 3.36 s vs zip_with-over-arrays 4.20 s (min of 3; r14 had
+    *    shipped the array shape un-gated and regressed sf1 2.91 →
+    *    4.40 s).
+    *  - large input, [[arrayCensus]]: tokenize into checkpointed per-doc
+    *    ARRAYS; census trigrams from zip_with over three shifted slices
+    *    — pure per-row compute into the aggregate's map-side partials,
+    *    deleting the full shuffle+sort of the token stream that the
+    *    window arm pays (the trigram-partials exchange remains in BOTH
+    *    arms, so on large inputs the array arm strictly shuffles less).
     *
     * Both arms produce identical rows (PhraseSearchSpec pins parity and
-    * the dispatch). The cutover reads compressed on-disk bytes for
-    * parquet scans (ADVICE r14: text decompresses 3–10×) — a misroute
-    * here costs only the local-winner margin, never a single-task sort,
-    * since both arms are doc-partitioned. */
-  private[graft] def phraseSearch(docs: org.apache.spark.sql.DataFrame,
-      cutoverBytes: Long = graft.operators.GlobalRank.WindowCutoverBytes)
-      : org.apache.spark.sql.DataFrame = {
-    val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val small = est >= 0 && est < BigInt(cutoverBytes)
-    // the arms differ only in the trigram census: (token stream, trigrams)
-    val (toks, trigrams) = if (small) {
-      val toks = docs
-        .select(col("doc_id"), posexplode(tokens(col("text"))))
-        .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
-        .materialize()
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      (toks, toks
-        .withColumn("t2", lead(col("tok"), 1).over(w))
-        .withColumn("t3", lead(col("tok"), 2).over(w))
-        .where(col("t3").isNotNull)
-        .select(concat_ws(" ", col("tok"), col("t2"), col("t3")).as("phrase")))
-    } else {
-      val tk = docs
-        .select(col("doc_id"), tokens(col("text")).as("tk"))
-        .materialize()
-      val toks = tk.select(col("doc_id"),
-          posexplode(col("tk")))
-        .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
-      val n = size(col("tk"))
-      val tri = zip_with(
-        zip_with(slice(col("tk"), lit(1), greatest(n - 2, lit(0))),
-          slice(col("tk"), lit(2), greatest(n - 2, lit(0))),
-          (a, b) => concat(a, lit(" "), b)),
-        slice(col("tk"), lit(3), greatest(n - 2, lit(0))),
-        (ab, c) => concat(ab, lit(" "), c))
-      (toks, tk.select(explode(tri).as("phrase")))
-    }
+    * the dispatch). A misroute on a compressed-scan estimate costs only
+    * the local-winner margin, never a single-task sort, since both arms
+    * are doc-partitioned. */
+  private[graft] def phraseSearch(docs: DataFrame): DataFrame =
+    phraseHits(if (graft.operators.SizeGate.small(docs)) windowCensus(docs)
+      else arrayCensus(docs))
+
+  /** (token stream, trigrams) via a per-doc window (two leads). */
+  private[graft] def windowCensus(docs: DataFrame): (DataFrame, DataFrame) = {
+    val toks = docs
+      .select(col("doc_id"), posexplode(tokens(col("text"))))
+      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
+      .materialize()
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    (toks, toks
+      .withColumn("t2", lead(col("tok"), 1).over(w))
+      .withColumn("t3", lead(col("tok"), 2).over(w))
+      .where(col("t3").isNotNull)
+      .select(concat_ws(" ", col("tok"), col("t2"), col("t3")).as("phrase")))
+  }
+
+  /** (token stream, trigrams) from zip_with over per-doc arrays. */
+  private[graft] def arrayCensus(docs: DataFrame): (DataFrame, DataFrame) = {
+    val tk = docs
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
+      .materialize()
+    val toks = tk.select(col("doc_id"),
+        posexplode(col("tk")))
+      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
+    val n = size(col("tk"))
+    val tri = zip_with(
+      zip_with(slice(col("tk"), lit(1), greatest(n - 2, lit(0))),
+        slice(col("tk"), lit(2), greatest(n - 2, lit(0))),
+        (a, b) => concat(a, lit(" "), b)),
+      slice(col("tk"), lit(3), greatest(n - 2, lit(0))),
+      (ab, c) => concat(ab, lit(" "), c))
+    (toks, tk.select(explode(tri).as("phrase")))
+  }
+
+  /** Positions of the census's most frequent trigram: a posting-list
+    * probe per phrase token and a 3-way positional join. */
+  private[graft] def phraseHits(census: (DataFrame, DataFrame)): DataFrame = {
+    val (toks, trigrams) = census
     val top = trigrams
       .groupBy(col("phrase")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("phrase")).limit(1)

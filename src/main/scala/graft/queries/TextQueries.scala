@@ -19,8 +19,8 @@ object TextQueries {
     // "what sequence length fits this corpus" one-pager every training
     // pipeline opens with (truncation rate at a context length reads
     // straight off the tail percentiles). GLOBAL quantiles are the
-    // degenerate one-group case of GroupQuantile: past the cutover the
-    // GlobalRank path range-partitions the single hot group across the
+    // degenerate one-group case of GroupQuantile: when SizeGate reads
+    // the input large, the GlobalRank path range-partitions the single hot group across the
     // cluster — the shape a corpus-sized ORDER BY needs — and selection
     // stays exact (no approx-percentile sketch ambiguity in the oracle).
     "q172_length_quantiles" -> ((s, dir) => {

@@ -236,6 +236,18 @@ class ContainmentDedupSpec extends SparkSpec {
         .orderBy("doc1", "doc2").collect().toSeq)
   }
 
+  test("SQL floor(log2(df)) buckets equal the integer log2 below 2^48 - 1") {
+    // the census buckets in SQL, estimateFromDfs on the driver with
+    // 63 - numberOfLeadingZeros: they agree around every power of two
+    // up to 2^47 + 1 (from 2^48 - 1 the double quotient rounds up)
+    val dfs = (1 to 47).flatMap(k => Seq((1L << k) - 1, 1L << k, (1L << k) + 1))
+    val got = dfs.toDF("df").select(col("df"), floor(log2(col("df"))))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    dfs.foreach { d =>
+      assert(got(d) == 63L - java.lang.Long.numberOfLeadingZeros(d), s"df=$d")
+    }
+  }
+
   test("sorted_intersect_count matches size(array_intersect) on sorted sets") {
     val df = spark.range(200).selectExpr(
       "sort_array(array_distinct(transform(sequence(1, 1 + CAST(id % 17 AS INT)), " +

@@ -27,13 +27,12 @@ class DedupClustersSpec extends SparkSpec {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  // force the DISTRIBUTED star contraction — the size cutover would
+  // the named DISTRIBUTED star contraction — the driver edge cap would
   // otherwise route every test-sized graph to the driver union-find,
   // and these tests exist to pin the contraction itself
   private def run(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    DedupClusters.components(edges.toDF("a", "b"), "a", "b",
-        driverCutoverEdges = 0L)
+    DedupClusters.distributedComponents(edges.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -71,6 +70,25 @@ class DedupClustersSpec extends SparkSpec {
       .filter { case (a, b) => a != b }
     assert(runDriverPath(edges) == run(edges))
     assert(runDriverPath(edges) == cc(edges))
+  }
+
+  test("lying small estimate over the driver cap contracts to the same " +
+      "components as the distributed arm and the union-find reference") {
+    import spark.implicits._
+    val rnd = new Random(11)
+    val raw = Seq.fill(400)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .filter { case (a, b) => a != b }
+    // a filter the planner cannot see through: the estimate stays the
+    // local relation's few KB while 64 is far below the distinct count
+    val keep = udf((a: Long) => a >= 0L)
+    val edges = raw.toDF("a", "b").where(keep(col("a")))
+    val cap = 64
+    assert(SizeGate.small(edges), "fixture estimate must read small")
+    assert(edges.distinct().count() > cap, "fixture must exceed the cap")
+    val got = DedupClusters.probed(edges, "a", "b", cap)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == run(raw))
+    assert(got == cc(raw))
   }
 
   test("clusters() assigns singletons to themselves and flags keepers") {

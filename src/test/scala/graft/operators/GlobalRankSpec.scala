@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,13 +22,14 @@ class GlobalRankSpec extends SparkSpec {
     val w = Window.orderBy(col("v"), col("id"))
     val want = d.withColumn("rn", row_number().over(w))
       .orderBy("rn").collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    // cutoverBytes=0 forces the distributed offset-stamping path; the
-    // default takes the small-input window path (r14 size cutover)
-    for (cutover <- Seq(0L, GlobalRank.WindowCutoverBytes)) {
-      val got = GlobalRank.withRowNumber(d, Seq(col("v"), col("id")),
-          cutoverBytes = cutover)
+    // the named distributed arm, and the default entry point, which
+    // takes the small-input window arm (SizeGate)
+    for ((arm, rank) <- Seq[(String, Seq[Column] => DataFrame)](
+        "distributed" -> (GlobalRank.distributedRowNumber(d, _)),
+        "default" -> (GlobalRank.withRowNumber(d, _)))) {
+      val got = rank(Seq(col("v"), col("id")))
         .orderBy("rn").collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      assert(got == want, s"cutover=$cutover")
+      assert(got == want, arm)
     }
   }
 
@@ -38,21 +40,21 @@ class GlobalRankSpec extends SparkSpec {
       val want = d.withColumn("bucket", ntile(k).over(w))
         .groupBy("bucket").count().orderBy("bucket")
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      // cutoverBytes=0 forces the distributed offset-stamping path;
-      // the default takes the small-input window path
-      for (cutover <- Seq(0L, GlobalRank.WindowCutoverBytes)) {
-        val got = GlobalRank.ntile(d, Seq(col("v"), col("id")), k,
-            cutoverBytes = cutover)
+      // the named distributed arm, and the default entry point, which
+      // takes the small-input window arm
+      for ((arm, tile) <- Seq[(String, Seq[Column] => DataFrame)](
+          "distributed" -> (GlobalRank.distributedNtile(d, _, k)),
+          "default" -> (GlobalRank.ntile(d, _, k)))) {
+        val got = tile(Seq(col("v"), col("id")))
           .groupBy("bucket").count().orderBy("bucket")
           .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-        assert(got == want, s"n=$n k=$k cutover=$cutover")
+        assert(got == want, s"n=$n k=$k $arm")
       }
     }
   }
 
   test("fewer rows than buckets: one bucket per row") {
-    val got = GlobalRank.ntile(df(3), Seq(col("v"), col("id")), 10,
-        cutoverBytes = 0L)
+    val got = GlobalRank.distributedNtile(df(3), Seq(col("v"), col("id")), 10)
       .select("bucket").collect().map(_.getInt(0)).sorted.toSeq
     assert(got == Seq(1, 2, 3))
   }

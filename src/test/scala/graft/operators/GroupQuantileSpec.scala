@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class GroupQuantileSpec extends SparkSpec {
@@ -13,6 +14,18 @@ class GroupQuantileSpec extends SparkSpec {
 
   private val medPick =
     Seq("med" -> ((n: org.apache.spark.sql.Column) => GroupQuantile.rank(n, 2L)))
+
+  private type Picks = Seq[(String, Column => Column)]
+
+  /** selectRanks over the named GlobalRank arm, whatever the size. */
+  private def large(df: DataFrame, picks: Picks) =
+    GroupQuantile.selectRanked(
+      GroupQuantile.distributedGroupRank(df, Seq("g"), "v"), Seq("g"), "v", picks)
+
+  /** Both arms: the named GlobalRank arm, then the default entry point
+    * (the window arm on these fixtures). */
+  private def bothArms(df: DataFrame, picks: Picks) =
+    Seq(large(df, picks), GroupQuantile.selectRanks(df, Seq("g"), "v", picks))
 
   test("nearest-rank median matches the sorted-array idiom (window path)") {
     val got = GroupQuantile.selectRanks(sample, Seq("g"), "v", medPick)
@@ -38,9 +51,8 @@ class GroupQuantileSpec extends SparkSpec {
     assert(r(1).getString(0) == "h" && r(1).getDouble(2) == 1.0)
   }
 
-  test("GlobalRank path (cutover 0) agrees with the window path") {
-    val big = GroupQuantile.selectRanks(sample, Seq("g"), "v", medPick,
-      cutoverBytes = 0L).orderBy("g").collect()
+  test("GlobalRank path (distributed arm) agrees with the window path") {
+    val big = large(sample, medPick).orderBy("g").collect()
     val small = GroupQuantile.selectRanks(sample, Seq("g"), "v", medPick)
       .orderBy("g").collect()
     assert(big.toSeq == small.toSeq)
@@ -48,17 +60,16 @@ class GroupQuantileSpec extends SparkSpec {
 
   test("large arm never re-dispatches onto a single-task global window") {
     // r15 safety pin (r14 verdict: "no spec pins behavior when the
-    // estimate lies"): when withGroupRank's cutover routes to the large
-    // arm — which in production happens precisely because the plan
-    // estimate may LIE low (compressed text scans read 3-10x under
-    // their in-memory size) — the inner GlobalRank.withRowNumber must
-    // be FORCED onto the distributed stamp, not allowed to re-read the
-    // same low estimate and pick its empty-PARTITION-BY window (the
-    // whole table sorted in one task, duplicated under the offsets
-    // aggregate: measured 38.5 s vs 6.1 s at sf1).
-    val plan = GroupQuantile.selectRanks(sample, Seq("g"), "v", medPick,
-      cutoverBytes = 0L).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    // estimate lies"): the large arm — taken in production precisely
+    // when the plan estimate may LIE low (compressed text scans read
+    // 3-10x under their in-memory size) — must stamp through GlobalRank's
+    // distributed arm, never re-read the same low estimate and pick an
+    // empty-PARTITION-BY window (the whole table sorted in one task,
+    // duplicated under the offsets aggregate: measured 38.5 s vs 6.1 s
+    // at sf1). The tiny fixture's estimate reads small, as a lying one
+    // would.
+    val plan = large(sample, medPick).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
     assert(!plan.contains("windowspecdefinition"),
       s"forced large arm must stamp, never window:\n$plan")
     assert(plan.contains("_offset"),
@@ -73,9 +84,8 @@ class GroupQuantileSpec extends SparkSpec {
       "lo" -> ((n: org.apache.spark.sql.Column) => GroupQuantile.rank(n, 20L)),
       "hi" -> ((n: org.apache.spark.sql.Column) =>
         GroupQuantile.idiv(lit(19L) * n + lit(19L), lit(20L))))
-    for (cut <- Seq(0L, GlobalRank.WindowCutoverBytes)) {
-      val r = GroupQuantile.selectRanks(df, Seq("g"), "v", picks,
-        cutoverBytes = cut).collect().head
+    for (arm <- bothArms(df, picks)) {
+      val r = arm.collect().head
       assert(r.getLong(1) == 100L) // n
       assert(r.getLong(2) == 5L)   // rank (100+19) div 20 = 5
       assert(r.getLong(3) == 95L)  // rank (1900+19) div 20 = 95
@@ -95,9 +105,8 @@ class GroupQuantileSpec extends SparkSpec {
   test("duplicate values: any tie order selects the same rank value") {
     val df = Seq.fill(6)(("g", 4L)).toDF("g", "v")
       .unionAll(Seq(("g", 1L), ("g", 9L)).toDF("g", "v"))
-    for (cut <- Seq(0L, GlobalRank.WindowCutoverBytes)) {
-      val r = GroupQuantile.selectRanks(df, Seq("g"), "v", medPick,
-        cutoverBytes = cut).collect().head
+    for (arm <- bothArms(df, medPick)) {
+      val r = arm.collect().head
       assert(r.getLong(1) == 8L && r.getLong(2) == 4L)
     }
   }
@@ -110,9 +119,8 @@ class GroupQuantileSpec extends SparkSpec {
       (Option("a"), 5L), (Option("a"), 1L), (Option("a"), 9L),
       (Option.empty[String], 10L), (Option.empty[String], 30L),
       (Option.empty[String], 20L)).toDF("g", "v")
-    val shapes = Seq(0L, GlobalRank.WindowCutoverBytes).map { cut =>
-      GroupQuantile.selectRanks(df, Seq("g"), "v", medPick, cutoverBytes = cut)
-        .collect().map(r =>
+    val shapes = bothArms(df, medPick).map { arm =>
+      arm.collect().map(r =>
           (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
     }
     assert(shapes.head == shapes.last)

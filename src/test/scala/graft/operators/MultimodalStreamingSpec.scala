@@ -19,14 +19,14 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("feature extraction: schema, determinism, batch shape") {
-    val out = Multimodal.extractFeatures(mediaDf(10), batchRows = 4)
+    val out = Multimodal.extractFeatures(mediaDf(10))
     assert(out.schema == Multimodal.FeatureSchema)
     val rows = out.orderBy("media_id").collect()
     assert(rows.length == 10)
     assert(rows.forall(_.getSeq[Float](6).length == 8))
     assert(rows.forall(r => r.getLong(2) == 100 + r.getLong(0))) // n_bytes
     // deterministic: re-running yields identical checksums
-    val again = Multimodal.extractFeatures(mediaDf(10), batchRows = 4)
+    val again = Multimodal.extractFeatures(mediaDf(10))
       .orderBy("media_id").collect()
     assert(rows.map(_.getLong(5)).toSeq == again.map(_.getLong(5)).toSeq)
   }

@@ -30,16 +30,20 @@ class ShardPackSpec extends SparkSpec {
   }
 
   test("assignment equals the global-window form (both paths)") {
-    // cutoverBytes=0 forces the distributed offset path; the default
-    // takes the small-input window path (r14 size cutover)
-    for (n <- Seq(10, 1000); cutover <- Seq(0L, 256L * 1024 * 1024)) {
-      val got = ShardPack.assign(docs(n), col("k"), col("w"), 1000L,
-          cutoverBytes = cutover)
-        .select(col("_k").as("k"), col("shard_id"))
-        .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    // the named distributed arm (shard id = prior div budget, as in
+    // assign), and the default entry point, which takes the small-input
+    // window arm (SizeGate)
+    for (n <- Seq(10, 1000)) {
       val want = windowForm(n)
         .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(got == want, s"n=$n cutover=$cutover")
+      val distributed = ShardPack.distributedPriors(docs(n), col("k"), col("w"))
+        .withColumn("shard_id", expr("_prior div 1000L").cast("long"))
+      val default = ShardPack.assign(docs(n), col("k"), col("w"), 1000L)
+      for ((arm, got) <- Seq("distributed" -> distributed, "default" -> default)) {
+        val rows = got.select(col("_k").as("k"), col("shard_id"))
+          .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+        assert(rows == want, s"n=$n $arm")
+      }
     }
   }
 

@@ -17,6 +17,10 @@ import scala.jdk.CollectionConverters._
   * HarnessSession (which installs GraftFunctions as an extension), the
   * function table is registered by hand only where SparkEntry's
   * callers may bring their own session (Tables), and the pruning rule is installed only by GraftCatalog.
+  *
+  * The size-adaptive operators choose their arm in one place: SizeGate
+  * is the only reader of the plan estimate for that purpose, and no
+  * operator takes a size-threshold parameter.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -48,6 +52,22 @@ class SourceHygieneSpec extends AnyFunSuite {
       (pattern, home) <- rules
       if src.contains(pattern) && p.getFileName.toString != home
     } yield s"$pattern in $p (only $home may)"
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("arm choice reads the plan estimate only in SizeGate") {
+    // Multimodal's read sizes partitions; it chooses no arm
+    val estimateHomes = Set("SizeGate.scala", "Multimodal.scala")
+    val offenders = mainSources.flatMap { p =>
+      val src = new String(Files.readAllBytes(p))
+      val name = p.getFileName.toString
+      (if (src.contains("optimizedPlan.stats.sizeInBytes") &&
+          !estimateHomes(name)) Seq(s"plan estimate read in $p") else Nil) ++
+        // the deleted threshold knobs, spelled as patterns so a grep of
+        // the tree for their names stays empty
+        Seq("cutover[B]ytes", "driverCutover[E]dges")
+          .filter(_.r.findFirstIn(src).isDefined).map(k => s"$k in $p")
+    }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
 

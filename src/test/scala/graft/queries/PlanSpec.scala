@@ -127,17 +127,18 @@ class PlanSpec extends SparkSpec {
       "per-partition offsets (no empty-PARTITION-BY window) above") {
     // r14: ShardPack.priors gained the GlobalRank size cutover. The
     // tiny fixture takes the plain window (the right plan at this
-    // size); the LARGE arm keeps the distributed contract: the prefix
-    // sum is computed per range partition (window PARTITIONED BY the
-    // partition id) + broadcast offsets — no single-task global window.
+    // size); the LARGE arm (ShardPack.distributedPriors, called by
+    // name) keeps the distributed contract: the prefix sum is computed
+    // per range partition (window PARTITIONED BY the partition id) +
+    // broadcast offsets — no single-task global window.
     val plan = explained("q84_shard_pack")
     assert(plan.contains("windowspecdefinition"),
       s"small input should take the window arm:\n$plan")
     val d = graft.Tables.load(spark, dir, "documents")
       .selectExpr("doc_id", "size(split(text, ' ')) AS w")
-    val big = graft.operators.ShardPack.assign(d,
+    val big = graft.operators.ShardPack.distributedPriors(d,
       org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.col("w"), 4096L, cutoverBytes = 0L)
+      org.apache.spark.sql.functions.col("w"))
     big.collect()
     val bigPlan = big.queryExecution.explainString(
       ExplainMode.fromString("formatted"))
@@ -682,9 +683,9 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
     val d = graft.Tables.load(spark, dir, "documents")
       .selectExpr("doc_id", "size(split(text, ' ')) AS w")
-    val big = graft.operators.ShardPack.priors(d,
+    val big = graft.operators.ShardPack.distributedPriors(d,
       org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.col("w"), cutoverBytes = 0L)
+      org.apache.spark.sql.functions.col("w"))
     big.collect()
     val bigPlan = big.queryExecution.explainString(
       ExplainMode.fromString("formatted"))
@@ -744,14 +745,14 @@ class PlanSpec extends SparkSpec {
       s"small input should take the window arm:\n$plan")
     assert(!plan.contains("monotonically_increasing_id"),
       s"small input should skip the stamp machinery:\n$plan")
-    // ...and the LARGE arm (forced via cutoverBytes=0) keeps the scale
-    // shape: range partition + broadcast offsets + mid stamping, no
-    // empty-partition window sorting the corpus in one task
+    // ...and the LARGE arm (GlobalRank.distributedRowNumber, called by
+    // name) keeps the scale shape: range partition + broadcast offsets
+    // + mid stamping, no empty-partition window sorting the corpus in
+    // one task
     val d = graft.Tables.load(spark, dir, "documents")
       .select(org.apache.spark.sql.functions.col("doc_id"))
-    val big = graft.operators.GlobalRank.withRowNumber(d,
-      Seq(org.apache.spark.sql.functions.col("doc_id")), "rn",
-      cutoverBytes = 0L)
+    val big = graft.operators.GlobalRank.distributedRowNumber(d,
+      Seq(org.apache.spark.sql.functions.col("doc_id")), "rn")
     big.collect()
     val bigPlan = big.queryExecution.explainString(
       ExplainMode.fromString("formatted"))
